@@ -29,7 +29,9 @@ from autoextraction_spark.operators import (  # noqa: E402
     textstats, tokenize,
 )
 from autoextraction_spark.operators.canonicalize import connected_components  # noqa: E402
-from autoextraction_spark.pipeline import salted_host_counts, url_dedup  # noqa: E402
+from autoextraction_spark.pipeline import (  # noqa: E402
+    salted_host_counts, triples_from_skeleton, url_dedup,
+)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -42,20 +44,13 @@ def _pipeline_triples(
     # ONE python hop for stages A-C (r6, guide §4): generation, the frozen
     # extract_text, the E1 anchor gate and the fused episode waves all run
     # inside a single mapInPandas over the (doc_id, lang) skeleton — the
-    # corpus text never crosses the Arrow boundary at all (the two-hop
-    # layout re-serialized it between the generator pass and the episode
-    # pass, and paid the per-task python protocol latency twice). Identical
-    # output to detect.detect_relations → ordered_slot_fill by construction
-    # (shared wave engine + the same anchor-presence gate; cross-checked in
-    # tests/test_slot_fill.py). ``where`` filters the doc skeleton BELOW the
-    # generator so it pushes into the parquet scan.
-    skel = corpus.doc_skeleton(spark, sf_dir, where=where)
-    # dedup inside the episode pass + assume_unique: the O4 set semantics
-    # without the full-output distinct() shuffle (see to_triples docstring)
-    completed = slot_fill.episodes_from_skeleton(
-        skel, policy=policy, dedup_assignments=True
+    # corpus text never crosses the Arrow boundary at all. Identical output
+    # to detect.detect_relations → ordered_slot_fill by construction
+    # (cross-checked in tests/test_slot_fill.py). ``where`` filters the doc
+    # skeleton BELOW the generator so it pushes into the parquet scan.
+    return triples_from_skeleton(
+        corpus.doc_skeleton(spark, sf_dir, where=where), policy
     )
-    return output.to_triples(output.completed_filter(completed), assume_unique=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:

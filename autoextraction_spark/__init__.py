@@ -14,7 +14,7 @@ Pipeline stages (SURVEY.md §7):
   D. output semantics     operators/output.py         (completed filter, triples, F1)
   E. entity linking       operators/linking.py        (MinHash/LSH blocking)
   F. canonicalization     operators/canonicalize.py   (connected components)
-  G. materialization      operators/materialize.py    (partitioned, lineage)
+  G. materialization      pipeline.py                 (partitioned, lineage)
 Plus training-data-pipeline operators: dedup.py, similarity.py,
 textstats.py, multimodal.py, fileops.py.
 """

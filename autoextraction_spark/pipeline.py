@@ -26,10 +26,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import corpus
-from .operators import detect, linking, output, slot_fill
-from .operators.text_extract import with_extracted_text
+from .operators import linking, output, slot_fill
 
-STAGES = ["pages", "text", "detected", "triples", "linking_map", "canonical"]
+STAGES = ["triples", "linking_map", "canonical"]
+
+
+def triples_from_skeleton(skel: DataFrame, policy: str = "rl") -> DataFrame:
+    """Stages A-D over the (doc_id, lang) skeleton: one python hop
+    (``slot_fill.episodes_from_skeleton``) → completed filter → triples.
+
+    The in-pass ``dedup_assignments`` is what makes ``assume_unique``
+    correct — it drops the full-output ``distinct()`` shuffle — so the two
+    are only ever set together, here."""
+    completed = slot_fill.episodes_from_skeleton(
+        skel, policy=policy, dedup_assignments=True
+    )
+    return output.to_triples(output.completed_filter(completed), assume_unique=True)
 
 
 def host_col(url: str = "url") -> F.Column:
@@ -162,7 +174,9 @@ def bucketed_join(
 
 
 class KgPipeline:
-    """Stages A-F with checkpoint/resume + manifest metrics."""
+    """Stages A-G as three checkpointed stages (``STAGES``): ``triples``
+    (A-D, one python hop over the doc skeleton), ``linking_map`` (E-F) and
+    ``canonical`` (G), with resume + manifest metrics."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, workdir: str, policy: str = "rl"):
         self.spark = spark
@@ -236,37 +250,16 @@ class KgPipeline:
 
     # -- stages ---------------------------------------------------------------
     def run(self, resume: bool = True) -> DataFrame:
-        fp = self._fingerprint("pages", "")
-        pages = self._stage(
-            "pages", lambda: corpus.web_pages(self.spark, self.sf_dir), resume, fp
-        )
-        fp = self._fingerprint("text", fp)
-        txt = self._stage(
-            "text",
-            lambda: with_extracted_text(pages.drop("_stage", "_part_id")),
-            resume,
-            fp,
-        )
-        fp = self._fingerprint("detected", fp)
-        det = self._stage(
-            "detected",
-            lambda: detect.detect_relations(txt.drop("_stage", "_part_id")),
-            resume,
-            fp,
-        )
-        fp = self._fingerprint("triples", fp)
+        # the skeleton is built inline, not checkpointed: read back from
+        # parquet it would lose doc_skeleton's input-sized partition count
+        # and the python hop would run at file-split parallelism. The price
+        # is the resume boundary — a job killed before ``triples`` finished
+        # redoes the whole hop.
+        fp = self._fingerprint("triples", "")
         triples = self._stage(
             "triples",
-            lambda: output.to_triples(
-                output.completed_filter(
-                    slot_fill.ordered_slot_fill(
-                        det.drop("_stage", "_part_id"),
-                        policy=self.policy,
-                        carry_text=False,
-                        dedup_assignments=True,
-                    )
-                ),
-                assume_unique=True,
+            lambda: triples_from_skeleton(
+                corpus.doc_skeleton(self.spark, self.sf_dir), self.policy
             ),
             resume,
             fp,

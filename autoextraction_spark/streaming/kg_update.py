@@ -40,7 +40,7 @@ from .ingest import stream_pages
 def _batch_triples(batch_df: DataFrame) -> DataFrame:
     txt = with_extracted_text(batch_df)
     det = detect.detect_relations(txt)
-    completed = slot_fill.ordered_slot_fill(det, checkpoint=False, carry_text=False)
+    completed = slot_fill.ordered_slot_fill(det, carry_text=False)
     return output.to_triples(output.completed_filter(completed))
 
 

@@ -1,12 +1,10 @@
 #!/usr/bin/env python
 """Single-core cProfile of the fused episode pass's python interior.
 
-The scaling decomposition (scripts/decompose_scaling.py) shows the ordered
-slot-filling stage is ~80% of the pipeline wall, and the stage telemetry
-(scripts/stage_metrics_probe.py) shows that wall is pure python-worker
-compute (JVM cpu ~= 0, gap ~= 0). This profiles exactly what one worker
-does — generation, extraction, detection gating, episode waves — WITHOUT
-Spark, on one core, so the function-level costs (regex scan vs regex
+The ordered slot-filling hop is most of the pipeline wall, and that wall is
+python-worker compute (per-layer attribution: ``perfbench/run.py --trace
+1``). This profiles exactly what one worker does — generation, extraction,
+detection gating, episode waves — WITHOUT Spark, on one core, so the function-level costs (regex scan vs regex
 compile vs python object churn) are visible and comparable across commits.
 
     python scripts/profile_episode.py --docs 4000 --sort cumtime | head -50

@@ -25,7 +25,7 @@ import json, os, sys, time
 sys.path.insert(0, "/root/repo")
 from autoextraction_spark.session import get_spark
 from autoextraction_spark import corpus
-from autoextraction_spark.operators import detect, output, slot_fill
+from autoextraction_spark.pipeline import triples_from_skeleton
 
 cpus = int(sys.argv[1]); sf_dir = sys.argv[2]; replicate = int(sys.argv[3])
 spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)
@@ -41,18 +41,13 @@ from pyspark.storagelevel import StorageLevel
 # waves_per_core=8: measured at local[16], the finer tasks + post-explode
 # uniform partitions recover ~7% of wall vs the 4-wave default (stalled
 # cores hand their remaining work to the scheduler instead of dragging a
-# whole wave; see corpus.doc_skeleton and scripts/granularity_probe.py)
+# whole wave; see corpus.doc_skeleton)
 skel = corpus.doc_skeleton(spark, sf_dir, replicate, waves_per_core=8).localCheckpoint(
     eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 def job():
-    # r6: the CURRENT stages A-D hot path — the fused single-hop pipeline
-    # (generation -> extract -> anchor gate -> episodes in one mapInPandas,
-    # see slot_fill.episodes_from_skeleton); byte-identical output to the
-    # staged chain this harness measured through r5.
-    completed = slot_fill.episodes_from_skeleton(skel, dedup_assignments=True)
-    return output.to_triples(output.completed_filter(completed),
-                             assume_unique=True).count()
+    # stages A-D as the package runs them: one python hop over the skeleton
+    return triples_from_skeleton(skel).count()
 
 # Untimed warm-up run: spawning the python-worker pool at high parallelism is
 # kernel-bound (fork + import storm, ~15s for 32 workers) and on a real
@@ -64,9 +59,7 @@ def job():
 warm_replicate = min(replicate, 64)
 warm_skel = corpus.doc_skeleton(spark, sf_dir, replicate=warm_replicate,
                                 waves_per_core=8)
-output.to_triples(output.completed_filter(
-    slot_fill.episodes_from_skeleton(warm_skel, dedup_assignments=True)),
-    assume_unique=True).count()
+triples_from_skeleton(warm_skel).count()
 walls, n = [], 0
 passes = int(os.environ.get("SPARK_GRAFT_SCALING_PASSES", "3"))
 for _ in range(passes):

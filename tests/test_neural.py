@@ -59,30 +59,6 @@ def test_batch_step_mlp_matches_per_state_choose_slot():
         assert got == scorers.step_state(*st, pol)
 
 
-def test_fused_equals_rounds_with_mlp(spark):
-    """The fused single-Arrow-pass runner and the per-round DataFrame loop
-    must stay equivalent under a non-linear policy (the round-2 invariant,
-    re-proven for the swap seam)."""
-    from autoextraction_spark.operators import slot_fill
-
-    det = spark.createDataFrame(
-        [(f"u{i}", "works_for", PRIM if i % 2 else ALT, "en") for i in range(8)]
-        + [("uz", "works_for", "王伟任职于华信集团。", "zh")],
-        "url string, rel string, text string, lang string",
-    )
-    pol = neural.mlp_policy(neural.MLPQ.init(hidden=8, seed=9))
-
-    def key(df):
-        return {
-            (r.url, r.rel, tuple(sorted(r.assigned.items())), r.step)
-            for r in df.collect()
-        }
-
-    fused = slot_fill.ordered_slot_fill(det, policy=pol, mode="fused")
-    rounds = slot_fill.ordered_slot_fill(det, policy=pol, mode="rounds")
-    assert key(fused) == key(rounds)
-
-
 def test_mlp_policy_full_corpus_parity(spark, sf_dir):
     """Capstone for the swap seam: train the MLP Q-head from scratch on the
     real synthetic corpus (lookahead reward), deploy via ``mlp:`` through

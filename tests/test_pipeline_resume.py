@@ -1,8 +1,8 @@
 """Checkpoint/resume orchestration + salted skew handling (pipeline.py)."""
 
 import glob
-import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -16,7 +16,7 @@ def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
     canonical = p.run(resume=False)
     assert canonical.count() > 0
     m = {x["stage"]: x for x in p.metrics()}
-    assert set(m) == {"pages", "text", "detected", "triples", "linking_map", "canonical"}
+    assert set(m) == {"triples", "linking_map", "canonical"}
     assert m["triples"]["rows"] > 0
     # lineage columns present in every checkpoint
     for stage in m:
@@ -29,20 +29,26 @@ def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
 def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run2")
     p = KgPipeline(spark, sf_dir, wd)
-    p.run(resume=False)
-    before = {s: os.path.getmtime(p._manifest_path(s)) for s in ("pages", "text")}
+    cols = ["url", "pred", "subj", "obj", "_stage"]
+    fresh = sorted(p.run(resume=False).select(*cols).collect())
+    before = os.path.getmtime(p._manifest_path("triples"))
 
-    # simulate a crash after 'detected': delete downstream outputs
-    for stage in ("triples", "linking_map", "canonical"):
+    # simulate a job killed during linking: both linking outputs are gone
+    for stage in ("linking_map", "canonical"):
         os.remove(p._manifest_path(stage))
+        shutil.rmtree(p._dir(stage))
 
     p2 = KgPipeline(spark, sf_dir, wd)
-    out = p2.run(resume=True)
-    assert out.count() > 0
-    # upstream manifests untouched -> stages were skipped, not recomputed
-    after = {s: os.path.getmtime(p2._manifest_path(s)) for s in ("pages", "text")}
-    assert before == after
-    assert os.path.exists(p2._manifest_path("canonical"))
+    resumed = sorted(p2.run(resume=True).select(*cols).collect())
+    # the triples checkpoint was reused, not recomputed; exactly the two
+    # linking stages re-ran
+    assert os.path.getmtime(p2._manifest_path("triples")) == before
+    assert [x["stage"] for x in p2.metrics()] == ["triples", "linking_map", "canonical"]
+    assert resumed == fresh
+    gold = corpus.gold_triples(spark, sf_dir, canonical=True)
+    assert [tuple(r[:4]) for r in resumed] == sorted(
+        tuple(r) for r in gold.select("url", "pred", "subj", "obj").collect()
+    )
 
 
 def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
@@ -51,18 +57,24 @@ def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run3")
     KgPipeline(spark, sf_dir, wd, policy="rl").run(resume=False)
     p_seq = KgPipeline(spark, sf_dir, wd, policy="sequence")
-    fp = p_seq._fingerprint("pages", "")
-    assert not p_seq.is_done("pages", fp)  # recorded fingerprint differs
+    fp = p_seq._fingerprint("triples", "")
+    assert not p_seq.is_done("triples", fp)  # recorded fingerprint differs
     before = os.path.getmtime(p_seq._manifest_path("triples"))
     p_seq.run(resume=True)
     assert os.path.getmtime(p_seq._manifest_path("triples")) > before
-    # sequence policy misses alt-phrased facts: strictly fewer triples
     m = {x["stage"]: x for x in p_seq.metrics()}
-    assert m["triples"]["fingerprint"] == p_seq._fingerprint(
-        "triples", p_seq._fingerprint(
-            "detected", p_seq._fingerprint("text", p_seq._fingerprint("pages", ""))
-        )
+    assert m["triples"]["fingerprint"] == fp
+    assert m["canonical"]["fingerprint"] == p_seq._fingerprint(
+        "canonical", p_seq._fingerprint("linking_map", fp)
     )
+
+
+def test_doc_skeleton_falls_back_to_cap_without_estimate(spark, sf_dir, monkeypatch):
+    # an unsizable input path must give the fixed wave cap, not a TypeError
+    monkeypatch.setattr(corpus, "_estimate_doc_count", lambda spark, sf_dir: None)
+    cap = max(spark.sparkContext.defaultParallelism * 4, 16)
+    assert corpus.doc_skeleton(spark, sf_dir).rdd.getNumPartitions() == cap
+    assert corpus.doc_skeleton(spark, sf_dir, replicate=2).rdd.getNumPartitions() == cap
 
 
 def test_salted_host_counts_match_direct(spark, sf_dir):

@@ -1,8 +1,11 @@
 """Stage B+C: detection gate and the ordered-slot-filling fork loop."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from autoextraction_spark import neural, scorers
 from autoextraction_spark import schema as S
 from autoextraction_spark.operators import detect, output, slot_fill
 
@@ -92,20 +95,73 @@ def test_cond_render_parse_roundtrip(tiny_pages):
         assert dict(r.parsed_assigned) == dict(r.assigned)
 
 
-@pytest.mark.parametrize("policy", ["rl", "sequence", "reverse", "random"])
-def test_fused_equals_rounds(tiny_pages, policy):
-    # the single-pass fused runner and the per-round DataFrame loop are two
-    # physical strategies for the same logical operator — identical output
-    det = detect.detect_relations(tiny_pages)
-    def norm(df):
-        return {
-            (r.url, r.rel, r.lang, tuple(sorted(r.assigned.items())),
-             tuple(r.remaining), round(r.score, 9), r.step)
-            for r in df.collect()
-        }
-    fused = slot_fill.ordered_slot_fill(det, policy=policy, mode="fused")
-    rounds = slot_fill.ordered_slot_fill(det, policy=policy, mode="rounds")
-    assert norm(fused) == norm(rounds.select(*[c for c in fused.columns]))
+def _state(url, rel, lang, assigned, remaining, score, step):
+    return (url, rel, lang, tuple(sorted(dict(assigned).items())),
+            tuple(remaining), round(score, 9), step)
+
+
+def _sequential_reference(rows, policy, dedup_assignments):
+    """Depth-first, one row at a time, one ``scorers.step_state`` per state:
+    the reference fork semantics (Environment.py:186-224 — choose a slot,
+    extract its candidates, fork one state per candidate) with none of the
+    wave batching of the Arrow pass. Returns the multiset of completed
+    states; ``dedup_assignments`` keeps the first state per (assigned,
+    remaining) of each episode tree (depth-first and wave order agree on it:
+    both visit same-depth leaves in candidate-index order)."""
+    out = Counter()
+    for r in rows:
+        seen = set()
+
+        def walk(assigned, remaining, score, step):
+            if not remaining or step >= slot_fill.MAX_STEPS:
+                key = (frozenset(assigned.items()), tuple(remaining))
+                if not (dedup_assignments and key in seen):
+                    seen.add(key)
+                    out[_state(r.url, r.rel, r.lang, assigned, remaining, score, step)] += 1
+                return
+            slot, cands, _ = scorers.step_state(
+                r.text, r.rel, r.lang, assigned, remaining, policy
+            )
+            rest = [s for s in remaining if s != slot]
+            for mention, _prob, sc in cands:
+                walk({**assigned, slot: mention}, rest, score + sc, step + 1)
+
+        walk({}, slot_fill.initial_remaining(r.rel, r.lang), 0.0, 0)
+    return out
+
+
+@pytest.fixture(scope="module")
+def episode_inputs(spark, sf_dir, tiny_pages):
+    """Detected (url, rel, text, lang) rows: the hand-made edge cases plus
+    the whole test corpus (relations, events, en + zh)."""
+    from autoextraction_spark import corpus
+
+    pages = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
+    cols = ["url", "rel", "text", "lang"]
+    det = (
+        detect.detect_relations(tiny_pages).select(*cols)
+        .unionByName(detect.detect_relations(pages).select(*cols))
+        .localCheckpoint(eager=True)
+    )
+    return det, det.collect()
+
+
+@pytest.mark.parametrize("policy", ["rl", "sequence", "reverse", "random", "mlp"])
+def test_ordered_slot_fill_matches_sequential_reference(episode_inputs, policy):
+    # the wave-batched Arrow pass is the only slot-fill engine; hold it to
+    # an independent row-at-a-time recursion on full typed states
+    if policy == "mlp":
+        policy = neural.mlp_policy(neural.MLPQ.init(hidden=8, seed=9))
+    det, rows = episode_inputs
+    for dedup in (False, True):
+        got = Counter(
+            _state(r.url, r.rel, r.lang, r.assigned, r.remaining, r.score, r.step)
+            for r in slot_fill.ordered_slot_fill(
+                det, policy=policy, dedup_assignments=dedup
+            ).collect()
+        )
+        want = _sequential_reference(rows, policy, dedup)
+        assert got == want, (dedup, len(got), len(want))
 
 
 def test_fused_carry_text_false_drops_text(tiny_pages):
@@ -159,17 +215,11 @@ def test_dedup_assignments_equals_distinct_plan(spark, sf_dir):
     assert "hashpartitioning" in slow_plan.lower()  # the shuffle we removed
 
 
-def test_dedup_assignments_rejects_rounds_mode(tiny_pages):
-    det = detect.detect_relations(tiny_pages)
-    with pytest.raises(ValueError):
-        slot_fill.ordered_slot_fill(det, mode="rounds", dedup_assignments=True)
-
-
 def test_episodes_from_skeleton_equals_staged_pipeline(spark, sf_dir):
     """The r6 single-hop fusion (generation → extract → anchor gate →
     episodes in ONE mapInPandas over the skeleton) emits exactly the same
     completed states as the staged web_pages → detect_relations →
-    fused_slot_fill chain — the equivalence the optimization round leans on
+    ordered_slot_fill chain — the equivalence the optimization round leans on
     for every _pipeline_triples consumer."""
     from autoextraction_spark import corpus
 
