@@ -121,7 +121,11 @@ def minhash_signature_from_sets(
     the per-row set, then k ``array_min`` folds — zero shuffle (r6). Bit-
     identical to :func:`minhash_signature`: the per-permutation min over a
     document's shingle set equals the grouped min over its exploded rows
-    (md5(concat(s, '')) ≡ md5(s); same Mersenne-prime arithmetic)."""
+    (md5(concat(s, '')) ≡ md5(s); same Mersenne-prime arithmetic).
+
+    Null contract: a row whose ``shs`` is NULL is kept and yields one
+    ``(id, NULL, …, NULL)`` row. (``word_shingles`` never makes a NULL set:
+    it maps null text to ``[""]``, the set of empty text.)"""
     h = F.expr(
         "transform(shs, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)"
         f" % {MINHASH_P}L)"
@@ -533,10 +537,16 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (cross-checked bit-identical in tests and against the unchanged SQL
     oracle). The input is spread to cluster parallelism first (no-op at
     scale) so the per-token md5s never run serially above a 1-task scan.
+
+    Null contract: a row whose text is NULL is kept and yields one
+    ``(id, NULL)`` row; ``simhash_dup_pairs`` never pairs it, because a NULL
+    band value equals nothing. ``text_col`` may be any column name: it is
+    backtick-quoted into the SQL expression.
     """
     df = spread_input(df)
+    quoted = "`" + text_col.replace("`", "``") + "`"
     hashes = (
-        f"transform(split({text_col}, ' '), t -> "
+        f"transform(split({quoted}, ' '), t -> "
         f"cast(conv(substring(md5(concat(t, '#simhash')), 1, 15), 16, 10) as bigint))"
     )
     counters = (

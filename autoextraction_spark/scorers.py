@@ -128,25 +128,26 @@ def _matches(
 
 
 @lru_cache(maxsize=2048)
-def _event_pattern(etype: str, assigned_key: tuple, want_role: str):
-    """Regex for extracting ``want_role`` of event ``etype`` given assigned
-    roles substituted as literals. Returns (pattern, group_index). The
-    entity class follows the event's language (zh events use the CJK run)."""
+def _event_scan(etype: str, assigned_key: tuple):
+    """(pattern, role -> group index) for event ``etype`` with the assigned
+    roles substituted as literals. Every open role is one group of the SAME
+    pattern, so one ``finditer`` yields the candidates of all of them. A
+    role missing from the map (assigned, or not a role of ``etype``) reads
+    group 0, the whole match. The entity class follows the event's language
+    (zh events use the CJK run)."""
     ev = S.EVENTS[etype]
     ent = ZH_ENT if ev["lang"] == "zh" else EN_ENT
     assigned = dict(assigned_key)
     segs = [re.escape(ev["parts"][0])]
-    group_idx, seen_groups = 0, 0
+    groups: dict[str, int] = {}
     for role, part in zip(ev["roles"], ev["parts"][1:]):
         if role in assigned:
             segs.append(re.escape(assigned[role]))
         else:
-            seen_groups += 1
-            if role == want_role:
-                group_idx = seen_groups
+            groups[role] = len(groups) + 1
             segs.append(f"({ent})")
         segs.append(re.escape(part))
-    return re.compile("".join(segs)), group_idx
+    return re.compile("".join(segs)), groups
 
 
 def event_candidates(
@@ -156,8 +157,8 @@ def event_candidates(
     the event template with assigned roles fixed anchors the wanted role."""
     if S.NONE_SENTINEL in assigned.values():
         return []
-    key = tuple(sorted(assigned.items()))
-    pat, gi = _event_pattern(etype, key, role)
+    pat, groups = _event_scan(etype, tuple(sorted(assigned.items())))
+    gi = groups.get(role, 0)
     return [(m.group(gi), PRIMARY_LOGIT) for m in pat.finditer(text)]
 
 
@@ -181,6 +182,51 @@ def raw_candidates(
     if other is None:
         return _matches(text, rel, lang, idx, None, primary_only=(idx == 0))
     return _matches(text, rel, lang, idx, other, primary_only=False)
+
+
+def remaining_raw_candidates(
+    text: str, rel: str, lang: str, assigned: dict[str, str], remaining: list[str]
+) -> list[list[tuple[str, float]]]:
+    """Raw candidates of EVERY slot in ``remaining`` from one regex scan per
+    pattern: equal to ``[raw_candidates(text, rel, lang, assigned, s) for s
+    in remaining]``, the way the reference scores all open slots in one
+    Q-net pass (predict.py:90-92).
+
+    - Events: every open role is a group of the one ``_event_scan`` pattern
+      for the assigned roles, so one ``finditer`` serves all of them.
+    - Binary relations with nothing assigned: subject and object are groups
+      1 and 2 of the same unfixed pattern, so one scan per connector
+      present fills both lists (alt connectors fill the object list only —
+      the primary-only subject rule of ``raw_candidates``).
+    - Binary relations with a slot assigned have one pattern per slot
+      anyway and go through ``raw_candidates``.
+    """
+    if rel in S.EVENTS:
+        if S.NONE_SENTINEL in assigned.values():
+            return [[] for _ in remaining]
+        pat, groups = _event_scan(rel, tuple(sorted(assigned.items())))
+        matches = list(pat.finditer(text))
+        return [
+            [(m.group(groups.get(role, 0)), PRIMARY_LOGIT) for m in matches]
+            for role in remaining
+        ]
+    names = slot_names(lang)
+    if names[0] in assigned or names[1] in assigned:
+        return [raw_candidates(text, rel, lang, assigned, s) for s in remaining]
+    subj: list[tuple[str, float]] = []
+    obj: list[tuple[str, float]] = []
+    for conn, is_primary in _connectors(rel, lang):
+        if conn not in text:  # same substring probe as _matches
+            continue
+        # findall ≡ finditer's (group 1, group 2) per match, built in C
+        pairs = _pattern(rel, lang, conn, None, None).findall(text)
+        if is_primary:
+            subj += [(s, PRIMARY_LOGIT) for s, _o in pairs]
+            obj += [(o, PRIMARY_LOGIT) for _s, o in pairs]
+        else:
+            obj += [(o, ALT_LOGIT) for _s, o in pairs]
+    by_idx = (subj, obj)
+    return [by_idx[names.index(s)] for s in remaining]
 
 
 def score2prob(entities: list[tuple[str, float]]) -> list[tuple[str, float, float]]:
@@ -209,11 +255,6 @@ def extract_candidates(
 ) -> list[tuple[str, float, float]]:
     cands = score2prob(raw_candidates(text, rel, lang, assigned, slot))
     return cands if cands else [NONE_CAND]
-
-
-def q_value(text: str, rel: str, lang: str, assigned: dict[str, str], slot: str) -> float:
-    """Deterministic stand-in for the DQN Q(slot | cond, text) value."""
-    return float(len(raw_candidates(text, rel, lang, assigned, slot)))
 
 
 FEATURE_DIM = 18  # 10 base + 8 hashed (rel, slot, progress) buckets
@@ -342,15 +383,25 @@ def choose_slot(
         # process-independent hash (python's hash() is salted per worker)
         key = "\x1f".join([text, rel, *sorted(assigned), *remaining]).encode("utf-8")
         return remaining[zlib.crc32(key) % len(remaining)]
-    # two-agent ensemble: agent2 adds a small any-match prior
+    # rl: two-agent ensemble over every open slot, one scan per pattern
+    return remaining[
+        _rl_pick(remaining_raw_candidates(text, rel, lang, assigned, remaining))
+    ]
+
+
+def _rl_pick(raws: list[list[tuple[str, float]]]) -> int:
+    """Index of the slot the ``rl`` policy picks, given each open slot's raw
+    candidates: the deterministic stand-in for the DQN value is
+    Q1 = candidate count, agent2 adds a small any-match prior, and the
+    argmax of Q1+Q2 keeps the first maximal index like torch.argmax."""
     best_i, best_q = 0, float("-inf")
-    for i, slot in enumerate(remaining):
-        q1 = q_value(text, rel, lang, assigned, slot)
+    for i, raw in enumerate(raws):
+        q1 = float(len(raw))
         q2 = 0.5 * q1 + (0.25 if q1 > 0 else 0.0)
         q = q1 + q2
-        if q > best_q:  # strict: keeps first maximal index like torch.argmax
+        if q > best_q:  # strict: keeps the first maximal index
             best_i, best_q = i, q
-    return remaining[best_i]
+    return best_i
 
 
 def step_state(
@@ -366,26 +417,19 @@ def step_state(
     Returns (chosen_slot, candidates, reward) where reward is the mean of
     per-mention max logits (Environment.py:197).
 
-    The default ``rl`` ensemble scores slots by candidate COUNT
-    (``q_value = len(raw_candidates)``), so the chosen slot's raw candidate
-    list is already in hand when extraction needs it — computing it once and
-    reusing it removes one full regex pass per step (the dominant per-row
-    cost). Output is identical by construction: ``extract_candidates`` is
+    The default ``rl`` ensemble scores slots by candidate COUNT, so the
+    chosen slot's raw candidate list is already in hand when extraction
+    needs it. All open slots are ranked from ``remaining_raw_candidates``
+    — one regex scan per pattern for every slot, not one per slot — and the
+    chosen slot's list is reused for extraction. Output is identical by
+    construction: ``extract_candidates`` is
     ``score2prob(raw_candidates(...)) or [NONE_CAND]``.
     """
     if policy == "rl" and len(remaining) > 1:
-        raws = {
-            s: raw_candidates(text, rel, lang, assigned, s) for s in remaining
-        }
-        best_i, best_q = 0, float("-inf")
-        for i, slot in enumerate(remaining):
-            q1 = float(len(raws[slot]))
-            q2 = 0.5 * q1 + (0.25 if q1 > 0 else 0.0)
-            q = q1 + q2
-            if q > best_q:  # strict: first-max tie-break like torch.argmax
-                best_i, best_q = i, q
+        raws = remaining_raw_candidates(text, rel, lang, assigned, remaining)
+        best_i = _rl_pick(raws)
         chosen = remaining[best_i]
-        cands = score2prob(raws[chosen]) or [NONE_CAND]
+        cands = score2prob(raws[best_i]) or [NONE_CAND]
     else:
         chosen = choose_slot(text, rel, lang, assigned, remaining, policy)
         cands = extract_candidates(text, rel, lang, assigned, chosen)

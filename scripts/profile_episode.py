@@ -1,87 +1,74 @@
 #!/usr/bin/env python
 """Single-core cProfile of the fused episode pass's python interior.
 
-The ordered slot-filling hop is most of the pipeline wall, and that wall is
-python-worker compute (per-layer attribution: ``perfbench/run.py --trace
-1``). This profiles exactly what one worker does — generation, extraction,
-detection gating, episode waves — WITHOUT Spark, on one core, so the function-level costs (regex scan vs regex
-compile vs python object churn) are visible and comparable across commits.
+Runs the real worker function, ``slot_fill._skeleton_episode_batches``
+(generation, extraction, anchor gate, episode waves, frame build), over a
+``perfbench/gen.documents`` skeleton in 4096-row Arrow-sized batches —
+WITHOUT Spark, on one core — so the function-level costs (regex scan vs
+python object churn) and the cyclic-GC passes are visible and comparable
+across commits.
 
-    python scripts/profile_episode.py --docs 4000 --sort cumtime | head -50
+    python scripts/profile_episode.py --docs 20000 --sort cumtime --top 40
 """
 
 from __future__ import annotations
 
 import argparse
 import cProfile
+import gc
+import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+BATCH_ROWS = 4096  # spark.sql.execution.arrow.maxRecordsPerBatch default
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=4000)
+    ap.add_argument("--docs", type=int, default=20_000)
+    ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--sort", default="tottime")
     ap.add_argument("--top", type=int, default=30)
     args = ap.parse_args()
 
-    from autoextraction_spark import schema as S
-    from autoextraction_spark.corpus import build_html
-    from autoextraction_spark.operators.text_extract import extract_text
-    from autoextraction_spark import scorers
-    from autoextraction_spark.operators.slot_fill import initial_remaining
+    from autoextraction_spark.operators import slot_fill
+    from perfbench.gen import documents
 
-    # synthesize the same per-doc work the worker does
-    docs = []
-    for d in range(args.docs):
-        lang = "zh" if d % 3 == 2 else "en"
-        docs.append((d, lang))
+    skel = documents(args.seed, args.docs).select(["doc_id", "lang"]).to_pandas()
+    batches = [skel.iloc[i:i + BATCH_ROWS] for i in range(0, len(skel), BATCH_ROWS)]
+    run = slot_fill._skeleton_episode_batches(
+        "rl", slot_fill.MAX_STEPS, dedup_assignments=True
+    )
 
-    def run() -> int:
-        n_states = 0
-        for d, lang in docs:
-            html = build_html(d, lang).encode("utf-8")
-            text = extract_text(html)
-            for rel in list(S.EN_TEMPLATES) + list(S.EVENTS):
-                # cheap stand-in for the detection gate: relations whose
-                # anchor text is present (same work shape as detect)
-                if rel in S.EVENTS:
-                    if S.EVENTS[rel]["anchor"] not in text:
-                        continue
-                elif not any(c in text for c, _ in scorers._connectors(rel, "en" if rel in S.EN_TEMPLATES else lang)):
-                    continue
-                lang_r = S.EVENTS[rel]["lang"] if rel in S.EVENTS else "en"
-                wave = [({}, initial_remaining(rel, lang_r))]
-                for _ in range(20):
-                    if not wave:
-                        break
-                    nxt = []
-                    for assigned, remaining in wave:
-                        if not remaining:
-                            n_states += 1
-                            continue
-                        slot, cands, _rw = scorers.step_state(
-                            text, rel, lang_r, assigned, remaining, "rl"
-                        )
-                        rem2 = [r for r in remaining if r != slot]
-                        for mention, _p, _s in cands:
-                            forked = dict(assigned)
-                            forked[slot] = mention
-                            nxt.append((forked, rem2))
-                    wave = nxt
-        return n_states
+    # per generation: [passes, seconds, objects collected]
+    gc_stats = {g: [0, 0.0, 0] for g in range(3)}
+    started = [0.0]
 
+    def on_gc(phase: str, info: dict) -> None:
+        if phase == "start":
+            started[0] = time.perf_counter()
+            return
+        st = gc_stats[info["generation"]]
+        st[0] += 1
+        st[1] += time.perf_counter() - started[0]
+        st[2] += info["collected"]
+
+    gc.callbacks.append(on_gc)
     t0 = time.time()
     pr = cProfile.Profile()
     pr.enable()
-    n = run()
+    n = sum(len(frame) for frame in run(iter(batches)))
     pr.disable()
     wall = time.time() - t0
-    print(f"docs={args.docs} completed_states={n} wall={wall:.2f}s "
-          f"docs_per_core_sec={args.docs / wall:.0f}")
+    gc.callbacks.remove(on_gc)
+
+    print(f"docs={args.docs} completed_states={n} "
+          f"wall={wall:.2f}s docs_per_core_sec={args.docs / wall:.0f}")
+    for g, (passes, secs, collected) in gc_stats.items():
+        print(f"gc gen{g}: passes={passes} time={secs:.3f}s collected={collected}")
     pstats.Stats(pr).sort_stats(args.sort).print_stats(args.top)
     return 0
 

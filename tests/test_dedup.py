@@ -70,6 +70,35 @@ def test_simhash_near_dups(dup_docs):
     assert (1, 4) not in pairs
 
 
+def test_simhash64_quotes_the_text_column(dup_docs):
+    # a column name that needs quoting in SQL gives the same signatures
+    want = sorted(dedup.simhash64(dup_docs, "doc_id", "text").collect())
+    for name in ("body text", "a`b"):
+        renamed = dup_docs.withColumnRenamed("text", name)
+        assert sorted(dedup.simhash64(renamed, "doc_id", name).collect()) == want
+
+
+def test_null_text_keeps_one_null_signature_row(spark, dup_docs):
+    """Null contract of the row-local signatures: a NULL input keeps its
+    row with a NULL signature, and such a row joins no dup pair."""
+    with_null = dup_docs.union(spark.createDataFrame([(5, None)], dup_docs.schema))
+    sig = [r for r in dedup.simhash64(with_null, "doc_id", "text").collect() if r.id == 5]
+    assert [r.simhash for r in sig] == [None]
+    sets = spark.createDataFrame(
+        [(1, 3, ["a b c"]), (5, None, None)], "id long, n int, shs array<string>"
+    )
+    mh = [r for r in dedup.minhash_signature_from_sets(sets, 4).collect() if r.id == 5]
+    assert len(mh) == 1 and list(mh[0])[1:] == [None] * 4
+
+    def pairs(df):
+        return (
+            sorted(dedup.minhash_dup_pairs(df, "doc_id", "text", threshold=0.5).collect()),
+            sorted(dedup.simhash_dup_pairs(df, "doc_id", "text", max_hamming=8).collect()),
+        )
+
+    assert pairs(with_null) == pairs(dup_docs)
+
+
 def test_prefix_filter_join_is_exact(spark):
     # the prefix-filter inverted index must find EVERY pair with J >= t —
     # cross-check against brute-force all-pairs on a pseudo-random corpus

@@ -2,6 +2,9 @@
 
 import math
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from autoextraction_spark import scorers
 from autoextraction_spark import schema as S
 
@@ -202,3 +205,178 @@ def test_literal_prefix_fast_path_equals_compiled_pattern():
                     assert scorers._objs_after_literal(
                         text, fixed + conn, lang
                     ) == reference(text, fixed + conn, lang)
+
+
+# --------------------------------------------------------------- one scan
+# remaining_raw_candidates must equal raw_candidates per slot; step_state's
+# rl branch must equal the per-slot ranking it replaced (_per_slot_rl_step).
+# test_ordered_slot_fill_matches_sequential_reference uses step_state as its
+# oracle, so drift inside step_state can only be caught here.
+
+EN_NAMES = ["Alice Stone", "Acme Corp", "Brian Rivera", "Helios Labs", "Rome", "Acme"]
+ZH_NAMES = ["王伟", "华信集团", "北京", "李娜", "华信"]
+
+
+def _names(lang):
+    return ZH_NAMES if lang == "zh" else EN_NAMES
+
+
+def _binary_text(draw, lang):
+    """Sentences chaining names with connectors of ANY relation, primary
+    and alt: chains of three give overlapping mentions (``A works for B is
+    at C.``), and a name's prefix (Acme / Acme Corp) gives near misses."""
+    templates = S.ZH_TEMPLATES if lang == "zh" else S.EN_TEMPLATES
+    conns = sorted({c for ts in templates.values() for c, _p in ts})
+    end = "。" if lang == "zh" else "."
+    sents = []
+    for _ in range(draw(st.integers(0, 4))):
+        chain = draw(st.lists(st.sampled_from(_names(lang)), min_size=1, max_size=3))
+        parts = [chain[0]]
+        for name in chain[1:]:
+            parts += [draw(st.sampled_from(conns)), name]
+        sents.append("".join(parts) + draw(st.sampled_from([end, "", " x"])))
+    return draw(st.sampled_from([" ", "\n"])).join(sents)
+
+
+def _event_text(draw, etype):
+    ev = S.EVENTS[etype]
+    names = _names(ev["lang"])
+    sents = []
+    for _ in range(draw(st.integers(0, 3))):
+        parts = [ev["parts"][0]]
+        for part in ev["parts"][1:]:
+            parts += [draw(st.sampled_from(names)), part]
+        sents.append("".join(parts))
+    return " ".join(sents)
+
+
+@st.composite
+def scorer_states(draw):
+    """(text, rel, lang, assigned, remaining) over three kinds of text:
+    synthetic binary-relation sentences (en, zh), synthetic sentences of
+    each event type, and corpus pages (build_html -> extract_text). Every
+    slot is independently open, assigned a mention, or '[None]'."""
+    kind = draw(st.sampled_from(["binary", "event", "corpus"]))
+    if kind == "binary":
+        lang = draw(st.sampled_from(["en", "zh"]))
+        rel = draw(st.sampled_from(sorted(S.EN_TEMPLATES)))
+        text = _binary_text(draw, lang)
+    elif kind == "event":
+        rel = draw(st.sampled_from(sorted(S.EVENTS)))
+        lang = S.EVENTS[rel]["lang"]
+        text = _event_text(draw, rel)
+    else:
+        from autoextraction_spark.corpus import build_html
+        from autoextraction_spark.operators.text_extract import extract_text
+
+        d = draw(st.integers(0, 5000))
+        lang = draw(st.sampled_from(["en", "zh"]))
+        text = extract_text(build_html(d, lang).encode("utf-8"))
+        rel = draw(
+            st.sampled_from(sorted(S.EN_TEMPLATES) + S.EVENT_NAMES_BY_LANG[lang])
+        )
+    slots = (
+        list(S.EVENTS[rel]["roles"]) if rel in S.EVENTS else scorers.slot_names(lang)
+    )
+    # mentions the text really holds, plus the synthetic name pool
+    pool = sorted(
+        {m for s in slots for m, _ in scorers.raw_candidates(text, rel, lang, {}, s)}
+        | set(_names(lang))
+    )
+    assigned = {}
+    for s in slots:
+        pick = draw(st.sampled_from(["open", "open", "mention", "none"]))
+        if pick == "mention":
+            assigned[s] = draw(st.sampled_from(pool))
+        elif pick == "none":
+            assigned[s] = S.NONE_SENTINEL
+    remaining = draw(st.permutations([s for s in slots if s not in assigned]))
+    return text, rel, lang, assigned, list(remaining)
+
+
+def _per_slot_rl_step(text, rel, lang, assigned, remaining):
+    """The rl step as it was before the one-scan helper: one
+    raw_candidates scan per open slot, argmax(Q1+Q2) with first-max."""
+    raws = {s: scorers.raw_candidates(text, rel, lang, assigned, s) for s in remaining}
+    best_i, best_q = 0, float("-inf")
+    for i, slot in enumerate(remaining):
+        q1 = float(len(raws[slot]))
+        q2 = 0.5 * q1 + (0.25 if q1 > 0 else 0.0)
+        if q1 + q2 > best_q:
+            best_i, best_q = i, q1 + q2
+    chosen = remaining[best_i]
+    cands = scorers.score2prob(raws[chosen]) or [scorers.NONE_CAND]
+    return chosen, cands, sum(c[2] for c in cands) / len(cands)
+
+
+def _event_reference(text, etype, assigned, role):
+    """Event extraction with one pattern per wanted role, built
+    independently of scorers._event_scan (the per-role builder the shared
+    scan replaced)."""
+    import re
+
+    if S.NONE_SENTINEL in assigned.values():
+        return []
+    ev = S.EVENTS[etype]
+    ent = scorers.ZH_ENT if ev["lang"] == "zh" else scorers.EN_ENT
+    segs, group_idx, seen = [re.escape(ev["parts"][0])], 0, 0
+    for r, part in zip(ev["roles"], ev["parts"][1:]):
+        if r in assigned:
+            segs.append(re.escape(assigned[r]))
+        else:
+            seen += 1
+            group_idx = seen if r == role else group_idx
+            segs.append(f"({ent})")
+        segs.append(re.escape(part))
+    pat = re.compile("".join(segs))
+    return [(m.group(group_idx), scorers.PRIMARY_LOGIT) for m in pat.finditer(text)]
+
+
+@settings(max_examples=400, deadline=None)
+@given(scorer_states())
+def test_remaining_raw_candidates_equals_per_slot(state):
+    text, rel, lang, assigned, remaining = state
+    per_slot = [scorers.raw_candidates(text, rel, lang, assigned, s) for s in remaining]
+    assert scorers.remaining_raw_candidates(text, rel, lang, assigned, remaining) == per_slot
+    if rel in S.EVENTS:
+        assert per_slot == [_event_reference(text, rel, assigned, s) for s in remaining]
+
+
+@settings(max_examples=400, deadline=None)
+@given(scorer_states())
+def test_rl_step_equals_per_slot_ranking(state):
+    text, rel, lang, assigned, remaining = state
+    if not remaining:
+        return
+    want = _per_slot_rl_step(text, rel, lang, assigned, remaining)
+    assert scorers.step_state(text, rel, lang, assigned, remaining, "rl") == want
+    assert scorers.choose_slot(text, rel, lang, assigned, remaining, "rl") == want[0]
+
+
+def test_remaining_raw_candidates_fixed_cases():
+    # the kinds of state the property above must reach, pinned by hand
+    en = "Alice Stone works for Acme Corp is at Rome. Brian Rivera is at Helios Labs."
+    cases = [
+        (en, "works_for", "en", {}, ["subject", "object"]),
+        (en, "works_for", "en", {}, ["object", "subject"]),
+        (en, "works_for", "en", {"subject": "Alice Stone"}, ["object"]),
+        (en, "works_for", "en", {"object": S.NONE_SENTINEL}, ["subject"]),
+        ("王伟任职于华信集团。李娜任职于北京。", "works_for", "zh", {}, ["头实体", "尾实体"]),
+        ("Acme Corp hired Alice Stone in Rome.", "hired", "en", {},
+         ["employer", "employee", "city"]),
+        ("Acme Corp hired Alice Stone in Rome.", "hired", "en",
+         {"employee": "Alice Stone"}, ["city", "employer"]),
+        ("华信集团并购了北京，交易城市为北京。", "并购", "zh",
+         {"收购方": S.NONE_SENTINEL}, ["被收购方", "城市"]),
+    ]
+    for text, rel, lang, assigned, remaining in cases:
+        got = scorers.remaining_raw_candidates(text, rel, lang, assigned, remaining)
+        assert got == [
+            scorers.raw_candidates(text, rel, lang, assigned, s) for s in remaining
+        ], (text, rel, assigned, remaining)
+    # the alt connector feeds the object list only (primary-only subject)
+    subj, obj = scorers.remaining_raw_candidates(
+        en, "works_for", "en", {}, ["subject", "object"]
+    )
+    assert [m for m, _ in subj] == ["Alice Stone"]
+    assert [m for m, _ in obj] == ["Acme Corp", "Rome", "Helios Labs"]

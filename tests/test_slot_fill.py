@@ -256,3 +256,88 @@ def test_skeleton_gate_matches_detect_relations(spark, sf_dir):
     fused = slot_fill.episodes_from_skeleton(corpus.doc_skeleton(spark, sf_dir))
     got = {(r.url, r.rel) for r in fused.select("url", "rel").distinct().collect()}
     assert got == gate
+
+
+# ------------------------------------------------------------ GC pause
+# Both batch generators run each batch body with cyclic GC disabled and
+# restore the previous state before yielding. No Spark: the generators are
+# driven directly with pandas batches, as the Python worker drives them.
+
+def _detected_batches():
+    import pandas as pd
+
+    rows = [
+        ("u1", "works_for", "Alice Stone works for Acme Corp.", "en"),
+        ("u2", "works_for", "Karen Stone is at Meridian Systems.", "en"),
+        ("u5", "works_for", "王伟任职于华信集团。", "zh"),
+    ]
+    cols = ["url", "rel", "text", "lang"]
+    return [pd.DataFrame(rows[:2], columns=cols), pd.DataFrame(rows[2:], columns=cols)]
+
+
+def _skeleton_batches():
+    import pandas as pd
+
+    return [
+        pd.DataFrame({"doc_id": [0, 1, 2], "lang": ["en", "zh", "es"]}),
+        pd.DataFrame({"doc_id": [5, 9], "lang": ["en", "en"]}),
+    ]
+
+
+_GENERATORS = {
+    "detected": (
+        lambda: slot_fill._episode_batches("rl", slot_fill.MAX_STEPS, False, True),
+        _detected_batches,
+    ),
+    "skeleton": (
+        lambda: slot_fill._skeleton_episode_batches("rl", slot_fill.MAX_STEPS, True),
+        _skeleton_batches,
+    ),
+}
+
+
+@pytest.fixture
+def gc_restored():
+    import gc
+
+    was = gc.isenabled()
+    yield gc
+    (gc.enable if was else gc.disable)()
+
+
+@pytest.mark.parametrize("gen", sorted(_GENERATORS))
+@pytest.mark.parametrize("start_enabled", [True, False])
+def test_batch_generators_pause_gc_and_restore(gen, start_enabled, gc_restored, monkeypatch):
+    gc = gc_restored
+    make, batches = _GENERATORS[gen]
+    inside, held = [], []
+    real_step = scorers.batch_step
+
+    def spy(states, policy):
+        inside.append(gc.isenabled())
+        return real_step(states, policy)
+
+    monkeypatch.setattr(scorers, "batch_step", spy)
+    (gc.enable if start_enabled else gc.disable)()
+    for frame in make()(iter(batches())):
+        held.append(frame)
+        # the consumer of a yielded frame sees the collector as it was
+        assert gc.isenabled() is start_enabled
+    assert len(held) == 2 and all(len(f) for f in held)
+    assert inside and not any(inside)  # every wave ran with GC paused
+    assert gc.isenabled() is start_enabled
+
+
+@pytest.mark.parametrize("gen", sorted(_GENERATORS))
+def test_batch_generators_restore_gc_on_error(gen, gc_restored, monkeypatch):
+    gc = gc_restored
+    make, batches = _GENERATORS[gen]
+
+    def boom(states, policy):
+        raise RuntimeError("scorer failed")
+
+    monkeypatch.setattr(scorers, "batch_step", boom)
+    gc.enable()
+    with pytest.raises(RuntimeError, match="scorer failed"):
+        list(make()(iter(batches())))
+    assert gc.isenabled()
